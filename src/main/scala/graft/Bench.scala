@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at the configured scale
@@ -8,73 +11,103 @@ import org.apache.spark.sql.SparkSession
   * A warmup action runs first so timings measure query execution, not
   * JVM/codegen/classloading cold start; queries then run in sorted name
   * order for run-to-run comparability.
+  *
+  * Also home of the helpers the other timing mains share (BenchSf1,
+  * BenchColdLedger): the load gate, the table warm-up, the JSON number
+  * format and the BENCH_DETAIL.json `queries` reader.
   */
 object Bench {
+  // LOAD GATE: this host has minutes-long co-tenant bursts that have
+  // polluted two rounds of committed captures (r6 load 2.7→9.0,
+  // r7 3.5→13.3 — per-pass totals swinging 2.1× on identical code).
+  // A capture that STARTS loaded cannot become the artifact: wait for
+  // ambient 1-min load ≤ the gate before doing any work, bounded by
+  // SPARK_GRAFT_LOAD_MAX_WAIT_SEC. If the host never quiets, proceed
+  // (the stdout contract needs a JSON line) but stamp
+  // "load_gate_exceeded":true so the artifact self-reports as
+  // polluted instead of masquerading as a clean number.
+  private[graft] val loadGate =
+    sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE", "2.5").toDouble
+  // The committed-capture standard is TIGHTER than the gate (r10
+  // verdict: the artifact should START quiet, not merely gate-
+  // passing): within the same bounded wait, hold out for ambient
+  // load ≤ the quiet target (default 1.0) and only fall back to the
+  // 2.5 contract gate if the host never gets there —
+  // "load_gate_exceeded" still reports against the CONTRACT gate, so
+  // a capture that starts between 1.0 and 2.5 is disclosed by
+  // "load_avg_start" rather than flagged.
+  private[graft] val quietTarget = math.min(loadGate,
+    sys.env.getOrElse("SPARK_GRAFT_LOAD_QUIET", "1.0").toDouble)
+  private[graft] val maxWaitSec =
+    sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX_WAIT_SEC", "1200").toInt
+
+  // Optional file-split override for multi-file fixtures: the sf1
+  // layout (16 small files/table) packs into 2-3 splits under the
+  // 128m default, starving local[32] scans — BenchSf1 documents the
+  // same 8m rationale. Unset = Spark default (single-file sf0.1
+  // behavior unchanged).
+  private[graft] def splitOverride: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
+      .map("spark.sql.files.maxPartitionBytes" -> _).toSeq
+
+  private[graft] def loadAvg(): Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .getSystemLoadAverage
+
+  /** Waits, at most `cap` seconds, for the 1-min load to reach the quiet
+    * target; returns the seconds waited. */
+  private[graft] def awaitQuiet(tag: String, cap: Int = maxWaitSec): Int = {
+    var waited = 0
+    while (loadAvg() > quietTarget && waited < cap) {
+      System.err.println(
+        f"[$tag] load ${loadAvg()}%.2f > quiet target $quietTarget%.1f — waiting (${waited}s)")
+      Thread.sleep(30000)
+      waited += 30
+    }
+    waited
+  }
+
+  /** Touches every table once (JVM/codegen/classloading warm-up). */
+  private[graft] def warmTables(spark: SparkSession, dir: String): Unit = {
+    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+      "region", "documents", "embeddings").foreach { t =>
+      spark.read.parquet(s"$dir/$t.parquet").count()
+    }
+    graft.tables.Tables.events(spark, dir).count()
+  }
+
+  /** Locale.ROOT (ADVICE r13): a comma-decimal default locale would emit
+    * invalid JSON. */
+  private[graft] def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private[graft] def readJson(path: String): JsonNode =
+    new ObjectMapper().readTree(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
+
+  /** The per-query seconds of a BENCH_DETAIL-shaped capture. */
+  private[graft] def detailQueries(root: JsonNode, source: String): Map[String, Double] = {
+    val q = root.get("queries")
+    require(q != null, s"$source has no \"queries\" map — pass " +
+      "BENCH_DETAIL-shaped captures (the BENCH_rNN.json " +
+      "wrappers truncate the contract line inside \"tail\"; use " +
+      "`git show <round-commit>:BENCH_DETAIL.json` for prev)")
+    q.properties().asScala
+      .map(e => e.getKey -> e.getValue.asDouble()).toMap
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Optional file-split override for multi-file fixtures: the sf1
-    // layout (16 small files/table) packs into 2-3 splits under the
-    // 128m default, starving local[32] scans — BenchSf1 documents the
-    // same 8m rationale. Unset = Spark default (driver sf0.1 behavior
-    // unchanged).
-    val maxPartitionBytes = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = maxPartitionBytes
-      .fold(builder0)(b => builder0.config("spark.sql.files.maxPartitionBytes", b))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = LocalSession(cpus, splitOverride: _*)
 
-    def loadAvgNow(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-
-    // LOAD GATE: this host has minutes-long co-tenant bursts that have
-    // polluted two rounds of driver-visible captures (r6 load 2.7→9.0,
-    // r7 3.5→13.3 — per-pass totals swinging 2.1× on identical code).
-    // A capture that STARTS loaded cannot become the artifact: wait for
-    // ambient 1-min load ≤ the gate before doing any work, bounded by
-    // SPARK_GRAFT_LOAD_MAX_WAIT_SEC. If the host never quiets, proceed
-    // (the driver contract needs a JSON line) but stamp
-    // "load_gate_exceeded":true so the artifact self-reports as
-    // polluted instead of masquerading as a clean number.
-    val loadGate = sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE", "2.5").toDouble
-    // The committed-capture standard is TIGHTER than the gate (r10
-    // verdict: the artifact should START quiet, not merely gate-
-    // passing): within the same bounded wait, hold out for ambient
-    // load ≤ the quiet target (default 1.0) and only fall back to the
-    // 2.5 contract gate if the host never gets there —
-    // "load_gate_exceeded" still reports against the CONTRACT gate, so
-    // a capture that starts between 1.0 and 2.5 is disclosed by
-    // "load_avg_start" rather than flagged.
-    val quietTarget = math.min(loadGate,
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_QUIET", "1.0").toDouble)
-    val maxWaitSec = sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX_WAIT_SEC", "1200").toInt
-    def awaitQuiet(phase: String, cap: Int): (Int, Boolean) = {
-      var waited = 0
-      while (loadAvgNow() > quietTarget && waited < cap) {
-        System.err.println(
-          f"[bench] $phase: load ${loadAvgNow()}%.2f > quiet target $quietTarget%.1f — waiting (${waited}s)")
-        Thread.sleep(30000)
-        waited += 30
-      }
-      (waited, loadAvgNow() > loadGate)
-    }
-    val (waitedStart, startStillLoaded) = awaitQuiet("start", maxWaitSec)
+    val waitedStart = awaitQuiet("bench start")
+    val startStillLoaded = loadAvg() > loadGate
 
     // Warmup: touch every table and exercise join/agg/window codegen once.
     try {
       SparkEntry.entry(spark).count()
-      Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-        "region", "documents", "embeddings").foreach { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet").count()
-      }
-      graft.tables.Tables.events(spark, sfDir).count()
+      warmTables(spark, sfDir)
     } catch { case e: Throwable => System.err.println(s"[bench] warmup: ${e.getMessage}") }
 
     // Three timed passes, min per query: this host shows intermittent
@@ -83,7 +116,6 @@ object Bench {
     // the standard way to report code speed rather than machine noise.
     // Disclosed in the JSON via "passes"/"timing", with per-pass maps
     // and the host load average so a polluted run is self-evident.
-    def loadAvg(): Double = loadAvgNow()
     val loadStart = loadAvg()
     // Two BLOCKS of two BACK-TO-BACK runs per query (min over all 4).
     // Within a pair, run 1 materializes persisted intermediates and run
@@ -118,7 +150,8 @@ object Bench {
     // start gate's so a mid-run co-tenant can't stall the capture past
     // any driver timeout
     Thread.sleep(5000)
-    val (waitedMid, midStillLoaded) = awaitQuiet("inter-block", maxWaitSec.min(300))
+    val waitedMid = awaitQuiet("bench inter-block", maxWaitSec.min(300))
+    val midStillLoaded = loadAvg() > loadGate
     val gateExceeded = startStillLoaded || midStillLoaded
     val blocks = Seq(firstBlock, block())
     val perQuery: Seq[(String, Seq[Double])] =
@@ -145,10 +178,6 @@ object Bench {
     val warm = minOf(Seq(1, 3))
     val coldTotal = cold.map(_._2).filter(_ >= 0).sum
     val warmTotal = warm.map(_._2).filter(_ >= 0).sum
-    // Locale.ROOT like BenchColdLedger (ADVICE r13): a comma-decimal
-    // default locale would emit invalid JSON
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def jsonMap(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -173,14 +202,7 @@ object Bench {
           "HEAD:BENCH_DETAIL.json").redirectErrorStream(false).start()
         val bytes = p.getInputStream.readAllBytes()
         if (p.waitFor() != 0) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          val q = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(bytes).get("queries")
-          if (q == null) Map.empty
-          else q.properties().asScala
-            .map(e => e.getKey -> e.getValue.asDouble()).toMap
-        }
+        else detailQueries(new ObjectMapper().readTree(bytes), "HEAD:BENCH_DETAIL.json")
       } catch { case e: Throwable =>
         System.err.println(s"[bench] control shift: no prev capture (${e.getMessage})")
         Map.empty
@@ -203,8 +225,7 @@ object Bench {
       .mkString(",")
     val detail =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${jsonMap(results)},"sf":"$sfDir","passes":${passes.size},"timing":"min","value_cold":${fmt(coldTotal)},"value_warm":${fmt(warmTotal)},"queries_cold":${jsonMap(cold.sortBy(_._1))},"queries_warm":${jsonMap(warm.sortBy(_._1))},${controlJson}"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"load_gate":$loadGate,"load_wait_sec":${waitedStart + waitedMid},"load_gate_exceeded":$gateExceeded,$passJson}"""
-    val detailPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"), "BENCH_DETAIL.json")
+    val detailPath = java.nio.file.Paths.get(repoDir, "BENCH_DETAIL.json")
     try {
       // experimental runs point SPARK_GRAFT_REPO at a scratch dir that
       // may not exist yet — create it instead of silently losing the

@@ -1,10 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
-
 /** Cold-minima ledger (automated): the round-over-round attribution
   * artifact PERF.md used to assemble from hand-run TimeQuery sessions.
   *
@@ -30,6 +25,8 @@ import org.apache.spark.sql.SparkSession
   *      SPARK_GRAFT_LEDGER_REPS (3), the Bench quiet-gate knobs.
   */
 object BenchColdLedger {
+  import Bench.fmt
+
   private val MoveFrac = 0.20
   /** Ignore movers below this many seconds on BOTH sides: a 20 % move
     * inside the jitter floor is host noise, not attribution material.
@@ -45,22 +42,10 @@ object BenchColdLedger {
     val topN = sys.env.getOrElse("SPARK_GRAFT_LEDGER_TOP", "10").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_LEDGER_REPS", "3").toInt
 
-    def rootOf(path: String) = new ObjectMapper().readTree(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
-    def queriesMap(root: com.fasterxml.jackson.databind.JsonNode,
-                   path: String): Map[String, Double] = {
-      val q = root.get("queries")
-      require(q != null, s"$path has no \"queries\" map — pass " +
-        "BENCH_DETAIL-shaped captures (the driver's BENCH_rNN.json " +
-        "wrappers truncate the contract line inside \"tail\"; use " +
-        "`git show <round-commit>:BENCH_DETAIL.json` for prev)")
-      q.properties().asScala
-        .map(e => e.getKey -> e.getValue.asDouble()).toMap
-    }
-    val curRoot = rootOf(curPath)
-    val cur = queriesMap(curRoot, curPath).filter(_._2 >= 0)
+    val curRoot = Bench.readJson(curPath)
+    val cur = Bench.detailQueries(curRoot, curPath).filter(_._2 >= 0)
     val prev = if (prevPath == "-") Map.empty[String, Double]
-      else queriesMap(rootOf(prevPath), prevPath).filter(_._2 >= 0)
+      else Bench.detailQueries(Bench.readJson(prevPath), prevPath).filter(_._2 >= 0)
 
     // Host-shift normalization (r15 verdict task 1): the capture's
     // control_shift field is the median cur/prev ratio over the FIXED
@@ -85,35 +70,13 @@ object BenchColdLedger {
     System.err.println(
       s"[ledger] movers(>20% after shift)=${movers.sorted.mkString(",")}")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
-
-    def loadAvg(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    val quiet = sys.env.getOrElse("SPARK_GRAFT_LOAD_QUIET", "1.0").toDouble
-    val maxWaitSec = sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX_WAIT_SEC", "1200").toInt
-    var waited = 0
-    while (loadAvg() > quiet && waited < maxWaitSec) {
-      System.err.println(f"[ledger] load ${loadAvg()}%.2f > $quiet%.1f — waiting (${waited}s)")
-      Thread.sleep(30000)
-      waited += 30
-    }
-    val loadStart = loadAvg()
+    val spark = LocalSession(cpus)
+    val waited = Bench.awaitQuiet("ledger")
+    val loadStart = Bench.loadAvg()
 
     // codegen/classloader warmup, same as Bench/TimeQuery
     SparkEntry.entry(spark).count()
 
-    // Locale.ROOT: a comma-decimal default locale would emit 0,123 and
-    // break the JSON (ADVICE r13)
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val rows = selected.map { name =>
       val fn = SparkEntry.queries(name)
       val ts = (1 to reps).map { _ =>
@@ -129,7 +92,7 @@ object BenchColdLedger {
           s" inbench=${cur.get(name).map(fmt).getOrElse("-")}")
       name -> (ts, why)
     }
-    val loadEnd = loadAvg()
+    val loadEnd = Bench.loadAvg()
     val body = rows.map { case (name, (ts, why)) =>
       val prevS = prev.get(name).map(fmt).getOrElse("null")
       s""""$name":{"cold_reps":[${ts.map(fmt).mkString(",")}],"cold_min":${fmt(ts.min)},"inbench_cur":${cur.get(name).map(fmt).getOrElse("null")},"inbench_prev":$prevS,"why":[${why.map("\"" + _ + "\"").mkString(",")}]}"""

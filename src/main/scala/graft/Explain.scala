@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of one query and time it.
   * Usage: runMain graft.Explain <query_name> [sfDir]
   */
@@ -14,17 +12,7 @@ object Explain {
     }
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // dev knob for perf experiments (Bench/Verify keep Spark defaults)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = LocalSession(cpus)
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     // Three timed passes (mirrors Bench): pass 1 shows cold/materialize

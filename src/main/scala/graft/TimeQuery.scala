@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Ad-hoc timing harness for individual queries:
-  * `runMain graft.TimeQuery <sfDir> <reps> <name> [<name> ...]`.
+  * `runMain graft.TimeQuery <sfDir> <reps> [--no-clear] <name> [<name> ...]`.
   *
-  * Names resolve from SparkEntry.queries, plus two pseudo-queries for
-  * the x21 mining-strategy A/B (`x21_full`, `x21_survivors`) so the
-  * variant trade can be re-measured without editing the query map.
-  * Each rep runs in a FRESH session-state (cleared cache) so reps are
-  * comparable cold runs; per-rep seconds print one line per query.
+  * Names resolve from SparkEntry.queries. Each rep runs in a FRESH
+  * session-state (cleared cache) so reps are comparable cold runs;
+  * per-rep seconds print one line per query.
   * Pass `--no-clear` as the first name to keep caches across queries
   * and reps — that measures the in-session shared-cache regime the
   * bench suite runs in (query order then matters, by design).
@@ -20,104 +16,16 @@ object TimeQuery {
     val (sfDir, reps) = (args(0), args(1).toInt)
     val noClear = args(2) == "--no-clear"
     val names = args.drop(if (noClear) 3 else 2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     // same optional multi-file split override as Bench (sf1 fixtures)
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .fold(builder0)(b => builder0.config("spark.sql.files.maxPartitionBytes", b))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.install(spark)
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      Bench.splitOverride: _*)
 
-    def resolve(name: String): (SparkSession, String) => DataFrame = name match {
-      case "x21_full" => (s, d) => queries.Extensions.pipelineDocs(s, d, mineSurvivorsOnly = false)
-      case "x21_survivors" => (s, d) => queries.Extensions.pipelineDocs(s, d, mineSurvivorsOnly = true)
-      // collapse-vs-direct A/B handles (builder-side; the driver surface
-      // always runs the collapsed defaults)
-      case "x37_direct" => (s, d) => operators.Dedup.fuzzyPairs(
-        graft.tables.Tables.documents(s, d), "text", "doc_id",
-        collapseExactDups = false)
-      case "x19_direct" => (s, d) => operators.Dedup.simhashCandidates(
-        graft.tables.Tables.documents(s, d), "text", "doc_id",
-        collapseExactDups = false)
-      case "x02_direct" => (s, d) => operators.Dedup.ngramJaccard(
-        graft.tables.Tables.documents(s, d), "text", "doc_id",
-        n = 3, threshold = 0.2, collapseExactDups = false)
-      // r6-variant replicas for the round-7 rewrite A/Bs (builder-side
-      // measurement only): the partitionless-window forms that the
-      // warning-silencing rewrite replaced, reconstructed from commit
-      // 254065d so the old-vs-new delta is directly measurable.
-      case "x52_window" => (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions._
-        val (k1, b, k) = (1.2, 0.75, 20)
-        val grid = 1048576
-        val docs = graft.tables.Tables.documents(s, d)
-        val base = docs.select(col("doc_id"),
-            split(lower(col("text")), "\\s+").as("ws"))
-          .withColumn("dl", size(col("ws")).cast("long"))
-        val stats = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_tok"))
-          .withColumn("avgdl", col("total_tok").cast("double") / col("n_docs"))
-          .select("n_docs", "avgdl")
-        val tf = base.select(col("doc_id"), col("dl"), explode(col("ws")).as("token"))
-          .filter(col("token").isin(queries.Extensions.bm25Terms: _*))
-          .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
-        val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
-        val idf = (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))
-        val denom = col("tf") + lit(k1) * (lit(1.0) - lit(b) +
-          lit(b) * col("dl") / col("avgdl"))
-        val raw = idf * col("tf") * lit(k1 + 1) / denom
-        val w = Window.orderBy(col("score").desc, col("doc_id"))
-        tf.join(broadcast(dfreq), "token")
-          .crossJoin(broadcast(stats))
-          .withColumn("contrib", floor(raw * grid + lit(0.5)) / grid)
-          .groupBy("doc_id")
-          .agg(sum(col("contrib")).as("score"), count(lit(1)).as("n_terms"))
-          .orderBy(col("score").desc, col("doc_id")).limit(k)
-          .withColumn("rank", row_number().over(w).cast("int"))
-          .select("doc_id", "rank", "n_terms", "score")
-          .orderBy("rank")
-      }
-      case "x54_window" => (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions._
-        val buckets = 10000
-        val grid = 1048576
-        val docs = graft.tables.Tables.documents(s, d)
-        val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        val rates = docs.groupBy("source").agg(count(lit(1)).as("n_stratum"))
-          .withColumn("gq",
-            floor(sqrt(col("n_stratum").cast("double")) * grid + lit(0.5)) / grid)
-          .withColumn("denom", sum(col("gq")).over(w))
-          .withColumn("t_target",
-            floor(sum(col("n_stratum")).over(w).cast("double") / 2))
-          .withColumn("mix_thr",
-            floor(least(col("gq") / col("denom") * col("t_target") / col("n_stratum"),
-              lit(1.0)) * buckets + lit(0.5)).cast("long"))
-          .select(col("source"), col("n_stratum"), col("mix_thr"))
-        val kept = docs.join(broadcast(rates), "source")
-          .filter(operators.Sampling.hashBucket(col("doc_id"), buckets) < col("mix_thr"))
-        rates
-          .join(kept.groupBy("source").agg(count(lit(1)).as("n_kept")),
-            Seq("source"), "left")
-          .select(col("source"), col("n_stratum").as("n_in"),
-            coalesce(col("n_kept"), lit(0L)).as("n_kept"), col("mix_thr"))
-          .orderBy("source")
-      }
-      case "x20_direct" => (s, d) => operators.Dedup.bandedJaccardMinhash(
-        graft.tables.Tables.documents(s, d), "text", "doc_id",
-        n = 3, threshold = 0.2, numHashes = 16, bands = 8,
-        collapseExactDups = false)
-      case q => SparkEntry.queries(q)
-    }
     // warmup codegen/classloading on the flagship
     SparkEntry.entry(spark).count()
     names.foreach { name =>
-      val fn = resolve(name)
+      val fn = SparkEntry.queries(name)
       val times = (1 to reps).map { _ =>
         if (!noClear) Caches.clearAll(spark) // cold per rep by default
         val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, NGram, RegexTokenizer}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -179,16 +178,6 @@ object Dedup {
   private[operators] def shingleArrayOfTokens(ws: Column, n: Int): Column =
     GraftFunctions.shingleArr(ws, n)
 
-  /** The pre-r16 interpreted chain, kept as the parity reference for
-    * [[graft.functions.ShingleArray]] (GraftFunctionsSpec pins equality
-    * element-for-element, including null/short/empty edges). */
-  private[graft] def shingleArrayZipWith(ws: Column, n: Int): Column = {
-    val m = greatest(size(ws) - (n - 1), lit(0))
-    (1 until n).foldLeft(slice(ws, lit(1), m)) { (acc, k) =>
-      zip_with(acc, slice(ws, lit(k + 1), m), (a, b) => concat(a, lit(" "), b))
-    }
-  }
-
   /** Exact n-gram Jaccard similarity for all pairs above `threshold`:
     * |A∩B| from a distinct-shingle self-join + pair count,
     * |A∪B| = |A|+|B|-|A∩B|.
@@ -206,7 +195,7 @@ object Dedup {
     *    pairs) must carry both shingle ARRAYS through the verification
     *    joins, which costs more than the direct self-join's ≈2.8M
     *    narrow (d1,d2) rows. For skewed real-world corpora where
-    *    Σdf² explodes, pre-band with [[minhashLsh]] or
+    *    Σdf² explodes, pre-band with [[minhashBandPairs]] or
     *    [[simhashCandidates]] and verify candidates here instead.
     *
     * `collapseExactDups` (default on) runs the quadratic join over ONE
@@ -515,34 +504,6 @@ object Dedup {
       .join(histHit.unionByName(dominated).distinct()
           .withColumnRenamed("b_id", "doc_id"),
         Seq("doc_id"), "left_anti")
-  }
-
-  /** MinHash+LSH near-dup candidates via MLlib (deterministic via seed):
-    * tokenize → shingle → binary HashingTF → MinHashLSH banding →
-    * approxSimilarityJoin at `maxJaccardDistance`.
-    */
-  def minhashLsh(docs: DataFrame, textCol: String, idCol: String,
-                 n: Int = 3, numHashTables: Int = 8,
-                 maxJaccardDistance: Double = 0.8, seed: Long = 42L): DataFrame = {
-    val tok = new RegexTokenizer().setInputCol(textCol).setOutputCol("tokens")
-      .setPattern("\\s+").setToLowercase(true)
-    val ng = new NGram().setN(n).setInputCol("tokens").setOutputCol("ngrams")
-    val tf = new HashingTF().setInputCol("ngrams").setOutputCol("features")
-      .setNumFeatures(1 << 16).setBinary(true)
-    val prepped = tf.transform(ng.transform(tok.transform(
-        docs.filter(size(split(lower(col(textCol)), "\\s+")) >= n))))
-      .select(col(idCol).as("doc_id"), col("features"))
-    val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-    // scale note: numHashTables trades recall for bucket-join volume —
-    // the per-band shuffle key count grows linearly with it.
-    val model = mh.fit(prepped)
-    model.approxSimilarityJoin(prepped, prepped, maxJaccardDistance, "jaccard_dist")
-      .select(
-        col("datasetA.doc_id").as("d1"),
-        col("datasetB.doc_id").as("d2"),
-        col("jaccard_dist"))
-      .filter(col("d1") < col("d2"))
   }
 
   /** One exploded (doc_id, sz, shingle) row per distinct shingle.

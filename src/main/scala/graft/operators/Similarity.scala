@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,16 +8,16 @@ import graft.tables.Exact
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Two paths:
+  * Main paths:
   *  - bruteForceTopK: exact cosine top-k. The query side is broadcast, the
   *    candidate side streams through a fused codegen cosine loop, and the
   *    per-query top-k is a rank-window over (similarity, id). At cluster
   *    scale this is a map-side broadcast join + per-partition partial
   *    top-k — no candidate shuffle until the final k·|queries| rows.
-  *  - lshTopK: scale path. Normalized vectors + euclidean
-  *    BucketedRandomProjectionLSH (cosine distance is a monotone function
-  *    of euclidean distance on the unit sphere: cos = 1 - d²/2), so only
-  *    bucket-colliding pairs are scored.
+  *  - srpTopK: scale path. Seeded scalar random projections bucket the
+  *    vectors, so only bucket-colliding pairs are scored.
+  *  - ivfTopKSampled / ivfTopKTrained: inverted-file index; each query
+  *    probes only its nearest cells of a sampled or k-means codebook.
   */
 object Similarity {
 
@@ -287,7 +285,7 @@ object Similarity {
     * callers must fence it like x05's probe set); candidates stream
     * scan-side, so cost is linear in the candidate corpus. The
     * unbounded-both-sides variant is this scoring composed over
-    * [[ivfTopK]] candidates instead of the exact cross product.
+    * [[ivfTopKSampled]] candidates instead of the exact cross product.
     */
   def marginTop1(candidates: DataFrame, queries: DataFrame,
                  vecCol: String, idCol: String, km: Int = 4): DataFrame = {
@@ -330,7 +328,7 @@ object Similarity {
     * replays the greedy bit-exactly as MATERIALIZED round CTEs.
     *
     * 100 TB: the candidate stage is the scale decision — swap
-    * [[bruteForceTopK]] for [[ivfTopK]] when the corpus outgrows the
+    * [[bruteForceTopK]] for [[ivfTopKSampled]] when the corpus outgrows the
     * broadcast-query scan; the greedy's cost is unchanged either way.
     */
   /** The distributed stage of [[mmrRerank]]: each query's top-`pool`
@@ -414,89 +412,6 @@ object Similarity {
     out.toDF("query_id", "sel_rank", "cand_id", "mmr")
   }
 
-  /** Approximate top-k via random-hyperplane-style LSH (deterministic via
-    * seed). Vectors are L2-normalized, hashed with euclidean LSH, and only
-    * bucket-colliding pairs are scored; cosine recovered as 1 - d²/2.
-    */
-  def lshTopK(candidates: DataFrame, queries: DataFrame,
-              vecCol: String, idCol: String, k: Int,
-              bucketLength: Double = 1.0, numHashTables: Int = 2,
-              seed: Long = 42L): DataFrame = {
-    GraftFunctions.register(candidates.sparkSession)
-    def prep(df: DataFrame, id: String): DataFrame = {
-      df.select(col(idCol).as(id),
-          array_to_vector(GraftFunctions.l2Normalize(col(vecCol))).as("nv"))
-        .filter(col("nv").isNotNull)
-    }
-    val c = prep(candidates, "cand_id")
-    val q = prep(queries, "query_id")
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("nv").setOutputCol("hashes")
-      .setBucketLength(bucketLength).setNumHashTables(numHashTables).setSeed(seed)
-    val model = lsh.fit(c)
-    // euclidean distance 2.0 on unit vectors covers the whole cosine range
-    val joined = model.approxSimilarityJoin(q, c, 2.0, "dist")
-      .select(
-        col("datasetA.query_id").as("query_id"),
-        col("datasetB.cand_id").as("cand_id"),
-        (lit(1.0) - col("dist") * col("dist") / 2).as("cosine"))
-      .filter(col("query_id") =!= col("cand_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "cand_id", "cosine")
-  }
-
-  /** IVF-style ANN (inverted-file index): candidates are partitioned
-    * into cells by a seeded KMeans codebook; each query probes only its
-    * `nProbe` nearest cells and brute-forces within them. At scale the
-    * cell id is a partitioning/clustering column, so a probe touches
-    * 1/cells of the data; recall is tunable via nProbe.
-    */
-  def ivfTopK(candidates: DataFrame, queries: DataFrame,
-              vecCol: String, idCol: String, k: Int,
-              cells: Int = 16, nProbe: Int = 4, seed: Long = 42L): DataFrame = {
-    GraftFunctions.register(candidates.sparkSession)
-    def vectorized(df: DataFrame, id: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).as(s"${id}_vec"),
-        array_to_vector(transform(col(vecCol), _.cast("double"))).as(s"${id}_mlvec"))
-    val c = vectorized(candidates, "cand_id")
-    // initMode "random": k-means|| init costs ~2·initSteps extra
-    // distributed passes to pick marginally better seeds — for an ANN
-    // codebook the recall difference is noise (measured in RecallSpec)
-    // while the fit cost dominates this operator's runtime.
-    val km = new org.apache.spark.ml.clustering.KMeans()
-      .setK(cells).setSeed(seed).setInitMode("random")
-      .setFeaturesCol("cand_id_mlvec").setPredictionCol("cell")
-    val model = km.fit(c)
-    val assigned = model.transform(c)
-      .select(col("cand_id"), col("cand_id_vec"), col("cell"))
-    // centroids as a tiny broadcast table; each query scores all cells
-    // and keeps its nProbe nearest
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (v, i) => (i, v.toArray.map(_.toFloat)) }.toSeq
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    val centDf = centroids.toDF("cell", "centroid")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val wCell = Window.partitionBy(col("query_id"))
-      .orderBy(col("cell_sim").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(centDf))
-      .withColumn("cell_sim", GraftFunctions.cosineSim(col("qv"), col("centroid")))
-      .withColumn("cell_rank", row_number().over(wCell))
-      .filter(col("cell_rank") <= nProbe)
-      .select("query_id", "qv", "cell")
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    probes.join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .withColumn("cosine", Exact.round6(GraftFunctions.cosineSim(col("qv"), col("cand_id_vec"))))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "cand_id", "cosine")
-  }
-
   /** Seeded ±1 projection directions for [[srpTopK]]: sign (t,d) is bit
     * 0 of Murmur3_x86_32.hashInt(t·dim+d, seed) — reproducible from the
     * (tables, dim, seed) triple alone, so the operator and the DuckDB
@@ -516,7 +431,7 @@ object Similarity {
     * directions; a pair is scored iff it collides in ANY table (the
     * same bucket-join-only semantics as MLlib's
     * BucketedRandomProjectionLSH at bucketLength 1 on normalized
-    * vectors, which stays available as [[lshTopK]]).
+    * vectors).
     *
     * Every arithmetic step is cross-engine exact: ±1 products of float
     * values are exact in double, both engines sum left-to-right, and
@@ -568,16 +483,16 @@ object Similarity {
   /** IVF with a deterministic sampled codebook: the `cells` candidate
     * vectors with the smallest (murmur3 hash of id, id) ARE the cell
     * centers — a uniform pseudo-random sample, no Lloyd iterations.
-    * Assignment and probing then work exactly like [[ivfTopK]]: each
-    * candidate joins its nearest center's cell, each query probes its
-    * `nProbe` nearest cells and brute-forces within them.
+    * Each candidate joins its nearest center's cell, each query probes
+    * its `nProbe` nearest cells and brute-forces within them.
     *
-    * Versus the KMeans codebook: on near-uniform embeddings sampled
-    * centers give statistically equivalent recall (RecallSpec pins
-    * both), and every step — hash sample, cosine argmax, probe ranking —
-    * is plain relational algebra, so the DuckDB oracle replays the whole
-    * operator bit-exactly (KMeans' iterative fit is not SQL-expressible;
-    * it stays as the library variant). Cosines are floor-rounded to 1e-6
+    * Versus an MLlib KMeans codebook: on near-uniform embeddings sampled
+    * centers gave statistically equivalent recall (RecallSpec pins the
+    * sampled recall floor), and every step — hash sample, cosine
+    * argmax, probe ranking — is plain relational algebra, so the DuckDB
+    * oracle replays the whole operator bit-exactly (MLlib's RNG-seeded
+    * fit is not; [[ivfTopKTrained]] is the exact trained-codebook
+    * form). Cosines are floor-rounded to 1e-6
     * before every ranking so ordering is engine-independent; ties break
     * on cell/candidate id.
     *
@@ -834,18 +749,6 @@ object Similarity {
         when(col("m").getField("neg") === lit(Double.MaxValue),
             lit(null).cast("double"))
           .otherwise(-col("m").getField("neg")).as("cosine"))
-  }
-
-  /** The TRAINED codebook from [[kMeans]]'s fit — `(cell, centroid)`
-    * with double-array centroids. The downstream consumer is
-    * [[ivfTopKTrained]] (IVF probing over learned centroids); exposed
-    * separately so one fit can index many query batches.
-    */
-  def kMeansCodebook(emb: DataFrame, vecCol: String, idCol: String,
-                     k: Int = 8, iters: Int = 2): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    kMeansFitSeq(emb, vecCol, idCol, k, iters).toDF("cell", "centroid")
   }
 
   /** The Lloyd fit alone, as driver state: `(cell, centroid)` rows in

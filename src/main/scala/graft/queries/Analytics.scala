@@ -992,6 +992,11 @@ object Analytics {
       // the directed-edge frame, and AQE does not reuse the two arms'
       // identical exchanges (measured: both map sides ran per run).
       // Part-cardinality bounded — dimension-sized pinned bytes.
+      // Fence: deriving support from fencedBaskets means a62 inherits
+      // a56's MaxBasketSize raise_error — an order above the cap fails
+      // a62 at first action rather than contributing support. A
+      // deliberate trade for the shared cache entry (the repeat edges
+      // were already fenced the same way); BasketFenceSpec pins it.
       val sup = graft.Caches.persistOnce(
         graft.Caches.persistOnce(fencedBaskets(T.lineitem(s, dir)))
           .select(explode(col("parts")).as("pk"))

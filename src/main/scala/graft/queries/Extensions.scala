@@ -16,9 +16,8 @@ import graft.tables.{Exact, Tables => T}
   * corpus; RecallSpec pins that equality), and the approximate ANN
   * queries, which run graft's deterministic variants (x06 seeded-sign
   * SRP-LSH, x17 sampled-codebook IVF) so the oracle can replay them
-  * bit-exactly. The MLlib variants (BucketedRandomProjectionLSH,
-  * KMeans IVF) stay as library alternatives; RecallSpec quantifies
-  * every approximate path against exact truth.
+  * bit-exactly. RecallSpec quantifies every approximate path against
+  * exact truth.
   */
 object Extensions {
   type Q = (SparkSession, String) => DataFrame
@@ -203,10 +202,6 @@ object Extensions {
     *    scale when the gates are aggressive and no sibling query shares
     *    the full-corpus shingles.
     * Both produce identical output (PipelineVariantsSpec).
-    *
-    * NOTE: `graft.X21Profile` mirrors these stages inline for per-stage
-    * timing — keep the two in sync when the pipeline changes, or the
-    * profiler silently profiles something else.
     */
   private[graft] def pipelineDocs(s: SparkSession, dir: String,
                                   mineSurvivorsOnly: Boolean): DataFrame = {
@@ -547,8 +542,8 @@ object Extensions {
     }),
 
     // LSH-bucketed ANN — graft's deterministic seeded-sign projection
-    // (same bucket-join-only semantics as the MLlib variant, which
-    // stays as Similarity.lshTopK), replayed bit-exactly by the oracle.
+    // (the bucket-join-only semantics of MLlib's random-projection
+    // LSH), replayed bit-exactly by the oracle.
     "x06_ann_lsh" -> ((s, dir) => {
       val emb = T.embeddings(s, dir)
       Similarity.srpTopK(emb, emb.filter(col("vec_id") < 5), "embedding", "vec_id",
@@ -1626,9 +1621,8 @@ object Extensions {
 
     // IVF ANN with the deterministic sampled codebook — every step
     // (hash-min sample, cosine argmax assignment, probe ranking) is
-    // relational, so the oracle replays it bit-exactly. The KMeans-
-    // codebook variant stays as Similarity.ivfTopK (RecallSpec compares
-    // both against exact truth).
+    // relational, so the oracle replays it bit-exactly (RecallSpec
+    // measures its recall against exact truth).
     "x17_ann_ivf" -> ((s, dir) => {
       val emb = T.embeddings(s, dir)
       Similarity.ivfTopKSampled(emb, emb.filter(col("vec_id") < 5), "embedding", "vec_id",
@@ -2008,7 +2002,7 @@ object Extensions {
     // raw cosine (Artetxe & Schwenk's margin criterion — the standard
     // parallel-corpus mining score). Exact baseline here; the
     // unbounded-both-sides scale path composes the same scoring over
-    // IVF candidates (Similarity.ivfTopK).
+    // IVF candidates (Similarity.ivfTopKSampled).
     "x102_bitext_margin" -> ((s, dir) => {
       val emb = T.embeddings(s, dir)
       Similarity.marginTop1(

@@ -15,7 +15,7 @@ object Tables {
     *
     * `spark.read.parquet` re-resolves the datasource on every call —
     * file listing + footer schema inference — measured at 0.10–0.17 s
-    * per call on this host (FloorProfile). Every query entry builds its
+    * per call on this host. Every query entry builds its
     * inputs through here, so an un-memoized load taxes each of the 276
     * bench queries ~0.1–0.4 s of pure metadata work per RUN (builds
     * happen inside the timed region). A catalog table resolves once per
@@ -61,11 +61,13 @@ object Tables {
 
   /** Drop memoized relations under `dir` for `spark` — call before
     * rewriting a table directory mid-session (see the immutability
-    * note above). */
+    * note above). Matches whole path segments: a sibling such as
+    * `…/sf0.15` survives `invalidate(…/sf0.1)`. */
   def invalidate(spark: SparkSession, dir: String): Unit =
     catalogs.synchronized {
       val m = catalogs.get(spark)
-      if (m != null) m.keys.filter(_.startsWith(dir)).foreach(m.remove)
+      val prefix = dir.stripSuffix("/") + "/"
+      if (m != null) m.keys.filter(_.startsWith(prefix)).foreach(m.remove)
     }
   private[tables] def memo(spark: SparkSession, key: String)
                           (load: => DataFrame): DataFrame =
@@ -125,8 +127,14 @@ object Tables {
     * of cluster size. No-op for inputs already at least as wide as the
     * default parallelism — at scale the scan has thousands of splits and
     * this adds nothing. The `.rdd` probe converts the plan once per
-    * DataFrame instance (driver-side milliseconds); a files peek cannot
-    * see the real scan-task count.
+    * DataFrame instance; a files peek cannot see the real scan-task
+    * count.
+    *
+    * Scan-only contract: pass a frame that is a (filtered/projected)
+    * table scan. Only then does the probe cost milliseconds. On a
+    * frame with exchanges (joins, aggregates) `.rdd` finalizes the
+    * adaptive plan and runs the upstream shuffle stages eagerly, and
+    * the later repartition does not reuse that work.
     */
   def spread(df: DataFrame): DataFrame = {
     // Streaming frames can't be probed (.rdd is a batch-only

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -7,6 +8,30 @@ class GraftFunctionsSpec extends SparkTestBase {
   import spark.implicits._
 
   GraftFunctions.register(spark)
+
+  /** The pre-r16 interpreted chain, kept as the parity reference for
+    * [[ShingleArray]]. */
+  private def shingleArrayZipWith(ws: Column, n: Int): Column = {
+    val m = greatest(size(ws) - (n - 1), lit(0))
+    (1 until n).foldLeft(slice(ws, lit(1), m)) { (acc, k) =>
+      zip_with(acc, slice(ws, lit(k + 1), m), (a, b) => concat(a, lit(" "), b))
+    }
+  }
+
+  /** The pre-r17 gopherQuality mode counter, kept as the parity
+    * reference for [[MaxRunLen]]: an aggregate() fold carrying
+    * (prev, run, best) over the array. */
+  private def maxRunLenFold(ws: Column): Column =
+    aggregate(
+      ws,
+      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
+      (acc, w) => {
+        val run = when(w === acc.getField("prev"), acc.getField("run") + 1)
+          .otherwise(lit(1))
+        struct(w.as("prev"), run.as("run"),
+          greatest(acc.getField("best"), run).as("best"))
+      },
+      acc => acc.getField("best"))
 
   test("cosine_sim matches a hand computation (codegen path)") {
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))
@@ -311,7 +336,7 @@ class GraftFunctionsSpec extends SparkTestBase {
     for (n <- Seq(1, 3, 5)) {
       val got = rows.select(
           GraftFunctions.shingleArr(col("ws"), n).as("a"),
-          graft.operators.Dedup.shingleArrayZipWith(col("ws"), n).as("b"))
+          shingleArrayZipWith(col("ws"), n).as("b"))
         .collect()
       got.foreach { r =>
         assert(Option(r.getSeq[String](0)) === Option(r.getSeq[String](1)),
@@ -321,7 +346,7 @@ class GraftFunctionsSpec extends SparkTestBase {
     // null INPUT array → null either way
     val nullRow = Seq((Option.empty[Seq[String]], 1)).toDF("ws", "i")
       .select(GraftFunctions.shingleArr(col("ws"), 3).as("a"),
-        graft.operators.Dedup.shingleArrayZipWith(col("ws"), 3).as("b"))
+        shingleArrayZipWith(col("ws"), 3).as("b"))
       .head()
     assert(nullRow.isNullAt(0) && nullRow.isNullAt(1))
     // interpreted eval matches the plan (codegen) result
@@ -395,5 +420,55 @@ class GraftFunctionsSpec extends SparkTestBase {
     val nullRow = Seq((Option.empty[Seq[Long]], 1)).toDF("kh", "i")
       .select(GraftFunctions.slidingMin(col("kh"), 4)).head()
     assert(nullRow.isNullAt(0))
+  }
+
+  test("max_run_len equals the aggregate() fold it replaced over sorted " +
+    "arrays (normal, empty, single, all-equal, null-element, empty-string " +
+    "edges); interpreted eval equals codegen") {
+    val cases: Seq[Seq[String]] = Seq(
+      Seq("b", "a", "c", "a", "b", "a"),   // normal: mode count 3
+      Seq.empty[String],                   // empty → 0
+      Seq("x"),                            // single element → 1
+      Seq("z", "z", "z", "z"),             // all equal → size
+      Seq("a", null, "a", null, null),     // null elements never extend a run
+      Seq(null, null),                     // nulls only → 1
+      Seq("", "", "a"),                    // empty-string tokens (old prev = "")
+      Seq("", "b", "", "")                 // empty string vs the old initial prev
+    )
+    val rows = cases.toDF("ws")
+    val got = rows.select(
+        GraftFunctions.maxRunLen(array_sort(col("ws"))).as("a"),
+        maxRunLenFold(array_sort(col("ws"))).as("b"),
+        array_sort(col("ws")).as("sorted"))
+      .collect()
+    assert(got.length === cases.length)
+    got.foreach { r =>
+      assert(r.getInt(0) === r.getInt(1),
+        s"mismatch on ${r.getSeq[String](2)}: native ${r.getInt(0)} vs fold ${r.getInt(1)}")
+    }
+    // null input array → null either way
+    val nullRow = Seq((Option.empty[Seq[String]], 1)).toDF("ws", "i")
+      .select(GraftFunctions.maxRunLen(col("ws")).as("a"),
+        maxRunLenFold(col("ws")).as("b"))
+      .head()
+    assert(nullRow.isNullAt(0) && nullRow.isNullAt(1))
+    // interpreted eval equals generated code for every case, the
+    // generated projection built directly so no optimizer folding can
+    // substitute the interpreted path
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val e = MaxRunLen(BoundReference(0, ArrayType(StringType), nullable = true))
+    val generated = GenerateUnsafeProjection.generate(Seq(e))
+    got.foreach { r =>
+      val sorted = r.getSeq[String](2)
+      val row = InternalRow(new GenericArrayData(
+        sorted.map(t => if (t == null) null else UTF8String.fromString(t)).toArray[Any]))
+      assert(e.eval(row) === r.getInt(0), s"interpreted on $sorted")
+      assert(generated(row).getInt(0) === r.getInt(0), s"codegen on $sorted")
+    }
   }
 }

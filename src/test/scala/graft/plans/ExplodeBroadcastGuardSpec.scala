@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 
-/** Guard against the explode-broadcast trap (see
-  * `graft.AuditExplodeBroadcast`): Catalyst estimates `Generate` output
+/** Guard against the explode-broadcast trap (first fixed for x51,
+  * `Dedup.containmentPairs`): Catalyst estimates `Generate` output
   * at ~its input size, ignoring fan-out, so a corpus-sized shingle/band
   * table can be planned as the BUILD side of a broadcast join — fine at
   * test scale, an OOM at 100 TB, and invisible to AQE (a static

@@ -155,6 +155,26 @@ class SourcesSpec extends SparkTestBase {
       "post-invalidate load must see the rewritten directory")
   }
 
+  test("catalog memo: invalidate(dir) keeps a sibling dir that only " +
+       "shares its string prefix (sf0.15 survives invalidate(sf0.1))") {
+    val root = Files.createTempDirectory("graft_memo_sib").toString
+    import spark.implicits._
+    for (sf <- Seq("sf0.1", "sf0.15"))
+      Seq((1L, "a")).toDF("id", "v").write.parquet(s"$root/$sf/t.parquet")
+    val near = Tables(spark, s"$root/sf0.1", "t")
+    val sibling = Tables(spark, s"$root/sf0.15", "t")
+    Tables.invalidate(spark, s"$root/sf0.1")
+    assert(!(Tables(spark, s"$root/sf0.1", "t") eq near),
+      "the invalidated dir must re-resolve")
+    assert(Tables(spark, s"$root/sf0.15", "t") eq sibling,
+      "a sibling sharing the string prefix must stay memoized")
+    // a trailing slash names the same directory
+    val again = Tables(spark, s"$root/sf0.1", "t")
+    Tables.invalidate(spark, s"$root/sf0.1/")
+    assert(!(Tables(spark, s"$root/sf0.1", "t") eq again))
+    assert(Tables(spark, s"$root/sf0.15", "t") eq sibling)
+  }
+
   test("catalog memo: stopped sessions are swept from the catalog map " +
        "on the next access (the value chain pins the weak key)") {
     // a private-field probe via reflection would overfit; instead pin
