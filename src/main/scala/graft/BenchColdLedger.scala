@@ -8,9 +8,10 @@ package graft
   * in-bench min moved >20 % against the previous capture (above a small
   * absolute floor so 0.02→0.03 s jitter rows don't flood the ledger).
   * Each selected query runs `reps` CACHE-CLEARED reps (Caches.clearAll
-  * before each — the TimeQuery cold regime, so ledger rows stay
-  * comparable with the r11/r12 hand-run entries; note the bench
-  * amortizes shared caches that these cold reps deliberately re-pay).
+  * before each — the TimeQuery cold regime: cached plans dropped,
+  * memoized builders re-run, table relations re-resolved; note the
+  * bench amortizes shared caches that these cold reps deliberately
+  * re-pay).
   *
   * Quiet-gated like Bench: the run waits (bounded) for ambient 1-min
   * load ≤ the quiet target before starting and stamps start/end load

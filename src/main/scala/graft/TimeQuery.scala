@@ -4,8 +4,9 @@ package graft
   * `runMain graft.TimeQuery <sfDir> <reps> [--no-clear] <name> [<name> ...]`.
   *
   * Names resolve from SparkEntry.queries. Each rep runs in a FRESH
-  * session-state (cleared cache) so reps are comparable cold runs;
-  * per-rep seconds print one line per query.
+  * session-state (`Caches.clearAll`: cached plans dropped, memoized
+  * builders re-run, table relations re-resolved) so reps are comparable
+  * cold runs; per-rep seconds print one line per query.
   * Pass `--no-clear` as the first name to keep caches across queries
   * and reps — that measures the in-session shared-cache regime the
   * bench suite runs in (query order then matters, by design).

@@ -25,21 +25,6 @@ import graft.functions.GraftFunctions
   */
 object Dedup {
 
-  /** Session memo behind [[dupFraction]], keyed on (session, canonical
-    * input plan, text column): the probe is one partial-agg job, but the
-    * collapse family runs it per operator per action, and its answer for
-    * a given input cannot change within a session any more than
-    * CacheManager's canonical-plan-matched caches can — the same
-    * staleness contract. Entries die with the driver; they hold only a
-    * canonical plan and a double.
-    */
-  private val dupProbeMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        String),
-      java.lang.Double]
-
   /** Collapse-routing threshold on [[dupFraction]]: the dup collapse
     * pays a FIXED keying/expansion cost (~0.6-0.7 s per operator at
     * sf0.1, PERF.md round 7) and repays it in candidate work that
@@ -67,22 +52,20 @@ object Dedup {
     * subtrees cannot. Routing never affects results: both paths are
     * output-equal (pinned on adversarial corpora in OperatorsSpec).
     */
-  private[operators] def dupFraction(docs: DataFrame, textCol: String): Double = {
-    val key = (docs.sparkSession,
-      docs.queryExecution.analyzed.canonicalized, textCol)
-    val cached = dupProbeMemo.get(key)
-    if (cached != null) cached.doubleValue()
-    else {
+  private[operators] def dupFraction(docs: DataFrame, textCol: String): Double =
+    // Keyed on the canonical input plan, not a table dir: the probe's
+    // answer for a given input cannot change within a session any more
+    // than CacheManager's canonical-plan-matched caches can (the same
+    // staleness contract), and routing never changes results.
+    graft.Caches.memo(docs.sparkSession,
+        (docs.queryExecution.analyzed.canonicalized, textCol)) {
       val r = docs.agg(
         count(lit(1)).as("n"),
         count_distinct(sha2(col(textCol), 256)).as("nd")).head()
-      val v =
+      java.lang.Double.valueOf(
         if (r.getLong(0) == 0L) 0.0
-        else (r.getLong(0) - r.getLong(1)).toDouble / r.getLong(0)
-      dupProbeMemo.putIfAbsent(key, java.lang.Double.valueOf(v))
-      v
-    }
-  }
+        else (r.getLong(0) - r.getLong(1)).toDouble / r.getLong(0))
+    }.doubleValue()
 
   /** The routing decision the collapse family shares: collapse only
     * when the probed dup RATE clears [[CollapseDupRateThreshold]] —
@@ -116,16 +99,7 @@ object Dedup {
     // Single-file (single-row-group) inputs scan as one task; spread the
     // shingle computation across the cluster when the source is narrower
     // than the available parallelism. No-op for well-partitioned input.
-    // The .rdd probe converts the plan once per DataFrame instance
-    // (QueryExecution caches it; driver-side milliseconds) — a
-    // files/partitioning peek cannot see the real scan-task count, and
-    // an unconditional repartition would add a shuffle for
-    // well-partitioned inputs, so the probe is the cheapest correct
-    // signal here.
-    val parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    val input =
-      if (docs.rdd.getNumPartitions < parallelism) docs.repartition(parallelism)
-      else docs
+    val input = graft.tables.Tables.spread(docs)
     // The cache boundary lives HERE (round 14; it used to sit on the
     // exploded [[shingleFlat]]): the regex split + shingle assembly +
     // array_distinct is the expensive part, and the one-pass signature
@@ -1454,10 +1428,7 @@ object Dedup {
     // Same narrow-input spread as [[shingles]]: single-row-group files
     // scan as one task; spread gram construction when the source is
     // narrower than the cluster.
-    val parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    val input =
-      if (docs.rdd.getNumPartitions < parallelism) docs.repartition(parallelism)
-      else docs
+    val input = graft.tables.Tables.spread(docs)
     // tokens-first + gram-array-first (r16): the split and the zip_with
     // chain each materialize ONCE per doc in projections; the Generate
     // and its inferred size()>0 filter then reference attributes. The

@@ -150,10 +150,7 @@ object TextAnalysis {
     * election (`limit(1).collect()`) PER merge step — `steps`
     * sequential Spark jobs. Fine at demo/analysis vocabularies
     * (steps ≲ 100); a production 32 k-merge vocabulary would be 32 k
-    * sequential jobs and wants the batched election ([[bpeMergeSeqBatched]]):
-    * elect the top-m pairs per round and apply the maximal mutually
-    * symbol-disjoint ranking prefix — up to m× fewer rounds, with the
-    * exactness argument (and its one tie-break caveat) stated there.
+    * sequential jobs.
     */
   def bpeMergeSequence(docs: DataFrame, textCol: String,
                        steps: Int = 4): DataFrame = {
@@ -215,92 +212,6 @@ object TextAnalysis {
           cur = next
         }
         step += 1
-      }
-    }
-    if (prev != null) prev.unpersist()
-    cur.unpersist()
-    merges.toSeq
-  }
-
-  /** Batched-election BPE learn — the vocabulary-scale path the
-    * [[bpeMergeSeq]] bound note names: per round, ONE driver election
-    * fetches the top-`batch` pairs and applies the maximal RANKING
-    * PREFIX that is mutually symbol-disjoint, stopping at the FIRST
-    * conflict (not skip-and-continue — a skipped conflicting pair's
-    * count may survive the earlier merge untouched, in which case true
-    * sequential BPE would elect IT next, so skipping past it would
-    * reorder the vocabulary). Up to `batch`× fewer sequential jobs:
-    * 32 k merges at batch=64 is ~500 rounds, not 32 k.
-    *
-    * Exactness: symbol-disjoint merges cannot change each other's
-    * counts, merging never increases any existing pair's count, and a
-    * pair newly created by merge (a,b) has count ≤ count(a,b), so every
-    * applied electee still dominates everything below it — the batched
-    * table equals the sequential one except when such a new pair TIES a
-    * later electee's count and wins the lexicographic tie-break
-    * (adversarial corpora only; equality at this corpus is pinned in
-    * BpeBatchSpec). The applied prefix inherits the sequential
-    * tie-break order, and disjoint merges commute, so intra-round
-    * apply order is immaterial.
-    */
-  def bpeMergeSeqBatched(docs: DataFrame, textCol: String,
-                         steps: Int = 4, batch: Int = 8): Seq[(Int, String, String, Long)] = {
-    require(steps >= 1, "steps must be >= 1")
-    require(batch >= 1, "batch must be >= 1")
-    val bb = "\u001f\u001f"
-    def pairCounts(stream: DataFrame): DataFrame = {
-      val arr = split(col("stream"), bb)
-      stream.select(slice(arr, lit(2), size(arr) - 2).as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(explode(zip_with(
-          slice(col("ws"), lit(1), size(col("ws")) - 1),
-          slice(col("ws"), lit(2), size(col("ws")) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-        .select(col("p.w1"), col("p.w2"))
-        .groupBy("w1", "w2").agg(count(lit(1)).as("n_pairs"))
-    }
-    var cur = docs
-      .select(concat(lit(bb), array_join(tokens(col(textCol)), bb), lit(bb))
-        .as("stream"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var prev: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var exhausted = false
-    while (merges.size < steps && !exhausted) {
-      val top = pairCounts(cur)
-        .orderBy(col("n_pairs").desc, col("w1"), col("w2"))
-        .limit(batch).collect()
-      if (prev != null) prev.unpersist()
-      prev = null
-      if (top.isEmpty) exhausted = true
-      else {
-        // maximal mutually-disjoint ranking prefix, capped at the
-        // remaining step budget
-        val used = scala.collection.mutable.Set.empty[String]
-        val applied = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var i = 0
-        var stop = false
-        while (i < top.length && !stop && merges.size + applied.size < steps) {
-          val r = top(i)
-          val (w1, w2, n) = (r.getString(0), r.getString(1), r.getLong(2))
-          if (used(w1) || used(w2)) stop = true
-          else { applied += ((w1, w2, n)); used += w1; used += w2 }
-          i += 1
-        }
-        applied.foreach { case (w1, w2, n) =>
-          merges += ((merges.size + 1, w1, w2, n))
-        }
-        if (merges.size < steps) {
-          val enc = applied.foldLeft(col("stream")) { case (sc, (w1, w2, _)) =>
-            replace(sc,
-              lit("\u001f" + w1 + bb + w2 + "\u001f"),
-              lit("\u001f" + w1 + " " + w2 + "\u001f"))
-          }
-          val next = cur.select(enc.as("stream"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          prev = cur
-          cur = next
-        }
       }
     }
     if (prev != null) prev.unpersist()

@@ -3,6 +3,8 @@ package graft.tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Caches
+
 /** Parquet table loaders for the driver test data (TESTDATA.md).
   *
   * Every query entry in [[graft.SparkEntry]] reads through here so the
@@ -19,62 +21,25 @@ object Tables {
     * inputs through here, so an un-memoized load taxes each of the 276
     * bench queries ~0.1–0.4 s of pure metadata work per RUN (builds
     * happen inside the timed region). A catalog table resolves once per
-    * session; this memo is exactly that analog: it caches the ANALYZED
-    * RELATION (schema + file index) only — no data, no results, nothing
-    * persisted across sessions. Every action still scans the parquet.
-    *
-    * Keyed per session; values are immutable DataFrames, safe to share
-    * across queries. The weak keying alone cannot collect entries — the
-    * cached DataFrames strongly reference their session, so the value
-    * chain pins the key (ADVICE r16) — hence the explicit stopped-
-    * session sweep on every catalog access.
-    *
-    * Aliasing note (ADVICE r16): [[memo]] returns the SAME Dataset
-    * instance for repeated loads, so two loads of one table share
-    * exprIds — a future query self-joining two loads with
-    * `df1("c") === df2("c")` would hit failAmbiguousSelfJoin. Current
-    * queries all disambiguate via `.as()`/renamed projections (the
-    * house style); keep doing that, or `.toDF()` one side.
+    * session; this memo ([[graft.Caches.memo]], keyed `<dir>/<name>`)
+    * is exactly that analog: it caches the ANALYZED RELATION (schema +
+    * file index) only — no data, no results. Every action still scans
+    * the parquet.
     *
     * Immutability assumption (ADVICE r16): the memo pins the resolved
     * FILE LISTING for the session. Driver test data is immutable by
     * contract; any code path that rewrites a table directory
-    * mid-session must call [[invalidate]] first or readers serve stale
-    * listings / missing-file errors. Sink paths stay unmemoized for
-    * exactly this reason.
+    * mid-session must call [[invalidate]] once the rewrite is done.
+    * Sink paths stay unmemoized for exactly this reason.
     */
-  private val catalogs =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-  private def catalog(spark: SparkSession) = catalogs.synchronized {
-    val it = catalogs.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next().sparkContext.isStopped) it.remove()
-    }
-    var m = catalogs.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-      catalogs.put(spark, m)
-    }
-    m
-  }
-
-  /** Drop memoized relations under `dir` for `spark` — call before
-    * rewriting a table directory mid-session (see the immutability
-    * note above). Matches whole path segments: a sibling such as
-    * `…/sf0.15` survives `invalidate(…/sf0.1)`. */
-  def invalidate(spark: SparkSession, dir: String): Unit =
-    catalogs.synchronized {
-      val m = catalogs.get(spark)
-      val prefix = dir.stripSuffix("/") + "/"
-      if (m != null) m.keys.filter(_.startsWith(prefix)).foreach(m.remove)
-    }
-  private[tables] def memo(spark: SparkSession, key: String)
-                          (load: => DataFrame): DataFrame =
-    catalog(spark).getOrElseUpdate(key, load)
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo(spark, s"$dir/$name")(spark.read.parquet(s"$dir/$name.parquet"))
+    Caches.memo(spark, s"$dir/$name")(spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** Drop everything memoized from the tables under `dir` for `spark`
+    * (relations and the frames and values derived from them) — see
+    * [[graft.Caches.invalidate]]. */
+  def invalidate(spark: SparkSession, dir: String): Unit =
+    Caches.invalidate(spark, dir)
 
   def lineitem(spark: SparkSession, dir: String): DataFrame  = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame    = apply(spark, dir, "orders")
@@ -96,7 +61,7 @@ object Tables {
     * to the same TimestampType column.
     */
   def events(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"$dir/events#ts") { eventsUnmemoized(spark, dir) }
+    Caches.memo(spark, s"$dir/events#ts") { eventsUnmemoized(spark, dir) }
 
   private def eventsUnmemoized(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -7,7 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * session; Test/fork is on, so this never collides with the user app).
   */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = {
+  lazy val spark: SparkSession = SparkTestBase.session()
+}
+
+object SparkTestBase {
+  /** The shared session, or a new one with the same settings once a
+    * suite has stopped it. */
+  def session(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")

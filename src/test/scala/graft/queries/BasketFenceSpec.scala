@@ -47,7 +47,7 @@ class BasketFenceSpec extends SparkTestBase {
     val all = messages(e).mkString("\n")
     assert(all.contains(s"exceeds MaxBasketSize=${Analytics.MaxBasketSize}: order 77"),
       s"fence message missing: $all")
-    Analytics.releaseRepeatEdges(spark)
+    graft.Caches.clearAll(spark)
   }
 
   test("a basket exactly at the cap passes") {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkTestBase
+import graft.{Caches, SparkTestBase}
 import org.apache.spark.storage.StorageLevel
 
 /** The session-memoized cluster-label table shared by x14/x44/x59.
@@ -15,7 +15,7 @@ class ClusterLabelsSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
 
   test("clusterLabels memoizes per (session, dir) and persists") {
-    Extensions.releaseClusterLabels(spark)
+    Caches.clearAll(spark)
     val a = Extensions.clusterLabels(spark, sf)
     val b = Extensions.clusterLabels(spark, sf)
     assert(a eq b, "second call must return the memoized frame")
@@ -35,12 +35,15 @@ class ClusterLabelsSpec extends SparkTestBase {
     assert(labels.count() === x14.length)
   }
 
+  // named for the per-memo release method Caches.clearAll replaced
   test("releaseClusterLabels unpersists and drops the memo") {
     val a = Extensions.clusterLabels(spark, sf)
-    Extensions.releaseClusterLabels(spark)
-    assert(a.storageLevel === StorageLevel.NONE, "release must unpersist")
+    Caches.clearAll(spark)
+    assert(a.storageLevel === StorageLevel.NONE, "clearAll must unpersist")
     val c = Extensions.clusterLabels(spark, sf)
-    assert(!(a eq c), "release must drop the memo so the next call rebuilds")
-    Extensions.releaseClusterLabels(spark)
+    assert(!(a eq c), "clearAll must drop the memo so the next call rebuilds")
+    assert(c.storageLevel != StorageLevel.NONE, "the rebuilt frame must be persisted")
+    assert(c.count() === a.count())
+    Caches.clearAll(spark)
   }
 }

@@ -1,6 +1,9 @@
 package graft.queries
 
-import graft.SparkTestBase
+import java.nio.file.{Files, Path}
+
+import graft.{Caches, SparkTestBase}
+import graft.tables.Tables
 import org.apache.spark.storage.StorageLevel
 
 /** The session-memoized banded-pair frame shared by x20, x84, and the
@@ -8,14 +11,15 @@ import org.apache.spark.storage.StorageLevel
   * textually identical `bandedJaccardMinhash` call sites converging via
   * canonical-plan caching — load-bearing for the bench but silently
   * breakable by a parameter drift at either site. `Extensions.bandedPairs`
-  * makes it an object identity; these pins keep it one.
+  * makes it an object identity; these pins keep it one, and pin that
+  * `Caches.clearAll` and `Tables.invalidate` reach the memo.
   */
 class SharedSubtreeSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
   test("bandedPairs memoizes per (session, dir) and persists") {
-    Extensions.releaseBandedPairs(spark)
+    Caches.clearAll(spark)
     val a = Extensions.bandedPairs(spark, sf)
     val b = Extensions.bandedPairs(spark, sf)
     assert(a eq b, "second call must return the memoized frame")
@@ -32,18 +36,49 @@ class SharedSubtreeSpec extends SparkTestBase {
     assert(x84.map(_.getLong(2)).sum === x20.length.toLong)
   }
 
+  // named for the per-memo release method Caches.clearAll replaced
   test("releaseBandedPairs unpersists and drops the memo") {
     val a = Extensions.bandedPairs(spark, sf)
-    Extensions.releaseBandedPairs(spark)
-    assert(a.storageLevel === StorageLevel.NONE, "release must unpersist")
+    Caches.clearAll(spark)
+    assert(a.storageLevel === StorageLevel.NONE, "clearAll must unpersist")
     val c = Extensions.bandedPairs(spark, sf)
-    assert(!(a eq c), "release must drop the memo so the next call rebuilds")
-    Extensions.releaseBandedPairs(spark)
+    assert(!(a eq c), "clearAll must drop the memo so the next call rebuilds")
+    assert(c.storageLevel != StorageLevel.NONE, "the rebuilt frame must be persisted")
+    assert(c.count() === a.count())
+    Caches.clearAll(spark)
+  }
+
+  test("invalidate(dir) reaches the derived frames: bandedPairs over a " +
+       "rewritten documents table reflects the new rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_invalidate")
+    val text = "the quick brown fox jumps over the lazy dog again"
+    // rewritten from outside the session, as another job would: a write
+    // through this session would itself refresh the cached plans
+    def writeDocs(n: Int): Unit = {
+      val staged = Files.createTempDirectory("graft_invalidate_staged")
+      (1 to n).map(i => (i.toLong, text)).toDF("doc_id", "text")
+        .write.parquet(s"$staged/documents.parquet")
+      val table = dir.resolve("documents.parquet")
+      if (Files.exists(table)) {
+        val old = Files.walk(table)
+        try old.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+        finally old.close()
+      }
+      Files.move(staged.resolve("documents.parquet"), table)
+    }
+    writeDocs(2)
+    assert(Extensions.bandedPairs(spark, dir.toString).count() === 1)
+    writeDocs(3)
+    Tables.invalidate(spark, dir.toString)
+    assert(Extensions.bandedPairs(spark, dir.toString).count() === 3,
+      "the pair frame must be rebuilt from the rewritten table")
+    Tables.invalidate(spark, dir.toString)
   }
 
   test("repeatEdges memoizes per (session, dir) and persists — a60/a61 " +
        "share one edge build (r9 verdict ask 3)") {
-    Analytics.releaseRepeatEdges(spark)
+    Caches.clearAll(spark)
     val a = Analytics.repeatEdges(spark, sf)
     val b = Analytics.repeatEdges(spark, sf)
     assert(a eq b, "second call must return the memoized frame")
@@ -59,12 +94,15 @@ class SharedSubtreeSpec extends SparkTestBase {
     assert(a60.count() <= nodes)
   }
 
+  // named for the per-memo release method Caches.clearAll replaced
   test("releaseRepeatEdges unpersists and drops the memo") {
     val a = Analytics.repeatEdges(spark, sf)
-    Analytics.releaseRepeatEdges(spark)
-    assert(a.storageLevel === StorageLevel.NONE, "release must unpersist")
+    Caches.clearAll(spark)
+    assert(a.storageLevel === StorageLevel.NONE, "clearAll must unpersist")
     val c = Analytics.repeatEdges(spark, sf)
-    assert(!(a eq c), "release must drop the memo so the next call rebuilds")
-    Analytics.releaseRepeatEdges(spark)
+    assert(!(a eq c), "clearAll must drop the memo so the next call rebuilds")
+    assert(c.storageLevel != StorageLevel.NONE, "the rebuilt frame must be persisted")
+    assert(c.count() === a.count())
+    Caches.clearAll(spark)
   }
 }

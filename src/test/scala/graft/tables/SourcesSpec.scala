@@ -185,5 +185,18 @@ class SourcesSpec extends SparkTestBase {
     assert(d2.sparkSession eq s2)
     val again = Tables.documents(spark, "/root/testdata/sf0.001")
     assert(again.sparkSession eq spark)
+    // a STOPPED session's entries, derived ones included, are swept by
+    // the next memo access from any session. Stopping the shared
+    // session is why this test comes last in the suite; later suites
+    // get a new one from SparkTestBase.session().
+    graft.queries.Extensions.bpeMerges(spark, "/root/testdata/sf0.001", steps = 1)
+    assert(graft.Caches.memoSize(spark) >= 2)
+    spark.stop()
+    assert(graft.Caches.memoSize(spark) >= 2, "entries stay until the next access")
+    val fresh = SparkTestBase.session()
+    assert(!(fresh eq spark))
+    Tables.documents(fresh, "/root/testdata/sf0.001")
+    assert(graft.Caches.memoSize(spark) === 0,
+      "the stopped session's entries must be swept")
   }
 }
